@@ -93,45 +93,25 @@ object Inputs {
         "regexp_extract(url, '^https://[^/]+/([^/]+)/', 1)", "octet_length(html)")
     }
 
-  /** Word vocabulary and language mix of the shared `documents` table the
-    * dedup operators were developed against: 30 words, 10 to 100 words a
-    * document, one document in 20 a copy of an earlier one with " dup"
-    * appended, a few exact copies. */
-  val docVocab: Vector[String] = Vector("a", "agg", "batch", "big", "column",
-    "customer", "data", "fast", "filter", "group", "hash", "join", "key",
-    "line", "merge", "order", "part", "query", "row", "scan", "slow",
-    "small", "sort", "spark", "stream", "table", "the", "value", "vector",
-    "window")
-  val docLangs: Vector[String] = Vector("en", "en", "en", "en", "en", "en",
-    "en", "en", "zh", "zh", "zh", "es", "es", "es", "fr", "fr", "fr", "de",
-    "de", "de")
-  val docGenSeed = 42L
-
   final case class Doc(doc_id: Long, text: String, lang: String,
       source: String, n_chars: Long)
 
-  /** The base documents in doc_id order; independent of the run's seed. */
-  def baseDocs(rows: Int): Vector[Doc] = {
-    val rng = new SyntheticCorpus.Rng(docGenSeed)
-    val texts = new Array[String](rows)
-    (0 until rows).map { i =>
-      val roll = rng.nextInt(1000)
-      texts(i) =
-        if (i >= 20 && roll < 50) texts(rng.nextInt(i)) + " dup"
-        else if (i >= 20 && roll < 52) texts(rng.nextInt(i))
-        else SyntheticCorpus.words(rng, 10 + rng.nextInt(91), docVocab)
-      Doc(i.toLong, texts(i), docLangs(rng.nextInt(docLangs.length)),
-        s"src${i % 20}", texts(i).length.toLong)
-    }.toVector
-  }
+  /** The shared `documents` table (sf0.1: 5,000 docs) that the dedup
+    * operators and their DuckDB oracle were developed against, as a byte
+    * copy in `perfbench/data`. */
+  def documentsSource(work: Path): Path =
+    work.getParent.resolve("data").resolve("documents.parquet")
 
-  /** The documents table, in doc_id order or with its rows in a
-    * seed-determined order: the operators' outputs must not depend on it. */
-  def documents(spark: SparkSession, dir: Path, rows: Int,
+  /** The first `rows` documents of the source table (all of them at the
+    * normal size), in doc_id order or in a seed-determined order: the
+    * operators' outputs must not depend on it. Either way the table is
+    * one file, as the source is. */
+  def documents(spark: SparkSession, dir: Path, source: Path, rows: Int,
       seed: Option[Long]): Input =
     load(dir).getOrElse {
       import spark.implicits._
-      val docs = baseDocs(rows)
+      val docs = spark.read.parquet(source.toString).as[Doc].collect()
+        .sortBy(_.doc_id).take(rows).toVector
       val ordered = seed.fold(docs)(new scala.util.Random(_).shuffle(docs))
       publish(spark, dir, path =>
         ordered.toDS().coalesce(1).write.parquet(path),

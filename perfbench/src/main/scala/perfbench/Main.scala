@@ -10,10 +10,9 @@ import scala.collection.mutable.ArrayBuffer
   *  - `gen`:  generate and cache the workload's seeded input;
   *  - `full`: time Spark session start plus the first, cold pass, then run
   *            closed-loop timed passes (one job at a time) at
-  *            `local[nproc]`; untraced runs then repeat the job at
-  *            `local[1]` for the scaling efficiency, traced runs attach the
-  *            tracer to half of their passes (ABBA order) and derive the
-  *            per-layer metrics.
+  *            `local[nproc]`. Traced runs attach the tracer to some of
+  *            their passes (ABBA order), derive the per-layer metrics, and
+  *            then repeat the job at `local[1]` for the scaling efficiency.
   * `full` prints one JSON object as its last stdout line. */
 object Main {
 
@@ -73,29 +72,42 @@ object Main {
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
   }
 
+  /** Pass walls of one loop, and each pass's heap peak: the highest
+    * occupancy after a collection that ended inside the pass, or after
+    * the full collections forced as it returned. */
+  final case class Passes(walls: Seq[Double], heapPeaks: Seq[Double])
+
   /** Closed loop: next pass only after the previous one returned, until the
     * time share is used and at least `minPasses` ran. Untimed full GCs
     * precede the first pass and follow each one, so passes do not inherit
-    * each other's heap; they also read each pass's live heap. Returns the
-    * pass walls and those readings. */
-  def loop(deadlineNs: Long, minPasses: Int)(
-      pass: Int => Double): (Seq[Double], Seq[Double]) = {
-    val walls, heap = ArrayBuffer.empty[Double]
+    * each other's heap; with `heap` they also read each pass's peak. */
+  def loop(deadlineNs: Long, minPasses: Int, heap: Boolean = true)(
+      pass: Int => Double): Passes = {
+    val walls, peaks = ArrayBuffer.empty[Double]
     System.gc()
     while (walls.length < minPasses || System.nanoTime() < deadlineNs) {
       val s0 = Steal.ticks()
+      val u0 = Jvm.uptimeMs
       walls += pass(walls.length)
+      val u1 = Jvm.uptimeMs
       stealLog += Steal.share(s0, Steal.ticks())
-      heap += Jvm.liveHeapMb()
+      if (heap) peaks += (Jvm.AfterGc.between(u0, u1) :+ Jvm.liveHeapMb()).max
+      else System.gc()
     }
-    (walls.toSeq, heap.toSeq)
+    Passes(walls.toSeq, peaks.toSeq)
   }
+
+  /** Timed passes right after set-up that the metrics leave out: passes
+    * keep getting faster for a few passes after set-up as the JIT warms
+    * up, and the JVM's own full collections cluster in them. */
+  val warmupPasses = 1
 
   /** Steal share of every timed pass, in run order (report only). */
   val stealLog = ArrayBuffer.empty[Double]
   private def isTraced(i: Int): Boolean = i % 4 == 1 || i % 4 == 2
 
   def full(a: Args, w: Workload): String = {
+    Jvm.AfterGc.start()
     val (spark0, setupS) = setup(a, w)
     var spark = spark0
     val jitSetupS = Jvm.jitMs / 1000.0
@@ -107,30 +119,25 @@ object Main {
     val metrics = ArrayBuffer.empty[(String, Double, String)]
     val report = ArrayBuffer.empty[(String, Any)]
     if (!a.trace) {
-      val (walls, heap) = loop(t0 + budgetNs / 2, 2)(i => w.timedPass(spark, None, i + 1))
-      spark.stop()
-      // the same job with one slot, for the scaling efficiency; the code
-      // is already compiled, so no warm-up pass
-      spark = session(a, 1, w.lifecycle)
-      val (walls1, _) = loop(t0 + budgetNs, 2)(i => w.timedPass(spark, None, 1001 + i))
-      val dps = rows / median(walls)
-      val dps1 = rows / median(walls1)
+      val p = loop(t0 + budgetNs, warmupPasses + 3)(i =>
+        w.timedPass(spark, None, i + 1))
+      val dps = rows / median(p.walls.drop(warmupPasses))
       metrics ++= Seq(("docs_per_s", dps, "1/s"), ("setup_s", setupS, "s"),
-        ("peak_heap_mb", heap.max, "MB"),
-        ("scaling_eff", dps / (a.nproc * dps1), "ratio"))
-      report ++= Seq("pass_walls_s" -> walls, "pass_walls_local1_s" -> walls1,
-        "docs_per_s_local1" -> dps1,
+        ("peak_heap_mb", median(p.heapPeaks.drop(warmupPasses)), "MB"))
+      report ++= Seq("pass_walls_s" -> p.walls, "warmup_passes" -> warmupPasses,
+        "pass_heap_peaks_mb" -> p.heapPeaks,
         "input_mb_per_s" -> dps * w.input.meanBytes / 1e6)
     } else {
       // untraced and traced passes alternate in ABBA order, so the overhead
       // estimate is not skewed by passes still getting faster as the JIT
-      // warms up
+      // warms up; a fifth, untraced pass gives the scaling efficiency two
+      // warm untraced passes
       val tr = new Tracer
       val rec = new StageRecorder(tr)
       val sc = spark.sparkContext
       tr.bind(sc)
       val gc0 = ArrayBuffer.empty[Double]
-      val (walls, _) = loop(t0 + budgetNs, 4) { i =>
+      val walls = loop(t0 + budgetNs, 5, heap = false) { i =>
         if (!isTraced(i)) w.timedPass(spark, None, i + 1)
         else {
           sc.addSparkListener(rec)
@@ -141,21 +148,33 @@ object Main {
           sc.removeSparkListener(rec)
           wall
         }
-      }
-      val plain = walls.indices.filterNot(isTraced).map(walls)
-      val traced = walls.indices.filter(isTraced).map(walls)
+      }.walls
+      val abba = walls.indices.take(4)
+      val plain = abba.filterNot(isTraced).map(walls)
+      val traced = abba.filter(isTraced).map(walls)
+      val warm = walls.indices.filter(i => i >= warmupPasses && !isTraced(i)).map(walls)
       val passes = walls.indices.filter(isTraced).map(_ + 1)
       val layer = w.layerMetrics(spark, tr, rec, passes) ++ Seq(
         ("jvm.gc_s", median(gc0.toSeq), "s"),
         ("jvm.gc_share", median(gc0.toSeq.zip(traced).map { case (g, t) => g / t }), "ratio"),
         ("jvm.jit_s", jitSetupS, "s"),
         ("trace.overhead_share", 1 - median(plain) / median(traced), "ratio"))
-      metrics ++= layer
+      // the same job with one slot, for the scaling efficiency; the first
+      // pass of the restarted session is slower than the next and is left
+      // out like the first pass after set-up
+      spark.stop()
+      spark = session(a, 1, w.lifecycle)
+      val walls1 = loop(System.nanoTime(), warmupPasses + 1, heap = false)(i =>
+        w.timedPass(spark, None, 1001 + i)).walls
+      val scaling = median(walls1.drop(warmupPasses)) / (a.nproc * median(warm))
+      metrics ++= layer :+ ("scaling_eff", scaling, "ratio")
       val traceFile = a.work.resolve("traces")
         .resolve(s"${a.workload}-s${a.seed}.json")
       Files.createDirectories(traceFile.getParent)
       Files.writeString(traceFile, tr.toJson)
-      report ++= Seq("pass_walls_s" -> plain, "traced_pass_walls_s" -> traced,
+      report ++= Seq("pass_walls_s" -> walls,
+        "traced_passes" -> walls.indices.filter(isTraced).map(_ + 1),
+        "pass_walls_local1_s" -> walls1,
         "docs_per_s_untraced" -> rows / median(plain),
         "docs_per_s_traced" -> rows / median(traced),
         "trace_file" -> traceFile.toString)
@@ -282,12 +301,18 @@ final class ArticlesWorkload(a0: Main.Args) extends Workload(a0) {
     val attributed = Lifecycle.Layers.names.indices.map(l.usPerDoc).sum
     if (l.mismatches > 0)
       checks += s"layered kernel disagreed with Extractor.extract on ${l.mismatches} rows"
+    // the layered and the fused runs are timed apart, so a share a little
+    // below 0 is timing noise; far outside this range the layers no longer
+    // account for the kernel
+    val unattributed = 1 - attributed / extractUs
+    if (unattributed < -0.1 || unattributed > 0.5)
+      checks += f"kernel layers sum to ${attributed}%.1f us of ${extractUs}%.1f us a doc"
     val pdf = pdfLayer(Inputs.pdfRows(if (a.tiny) 12 else 120, a.seed), 2)
     val kernel = Seq(
       ("engine.extract_us_per_doc", extractUs, "us"),
       ("engine.extract_p50_us", pct(0.5), "us"),
       ("engine.extract_p999_us", pct(0.999), "us"),
-      ("engine.unattributed_share", 1 - attributed / extractUs, "ratio")) ++
+      ("engine.unattributed_share", unattributed, "ratio")) ++
       Lifecycle.Layers.names.zipWithIndex.map { case (name, k) =>
         (s"${name}_us_per_doc", l.usPerDoc(k), "us") } ++
       outcomeClasses.map(c => (s"engine.outcome.$c",
@@ -313,8 +338,10 @@ final class DedupWorkload(a0: Main.Args) extends Workload(a0) {
   private var expectedOut: Map[String, DedupOps.OpOut] = _
   private val opRuns = ArrayBuffer.empty[(Int, Map[String, DedupOps.OpOut])]
 
+  private def source = Inputs.documentsSource(a.work)
+
   def generate(spark: SparkSession): Unit =
-    Inputs.documents(spark, baseDir, rows, None)
+    Inputs.documents(spark, baseDir, source, rows, None)
 
   /** The cold pass runs on the table in doc_id order; its outputs are the
     * reference every seed-ordered pass must reproduce. */
@@ -323,10 +350,8 @@ final class DedupWorkload(a0: Main.Args) extends Workload(a0) {
     spark.catalog.clearCache()
   }
 
-  def afterSetup(spark: SparkSession): Unit = {
-    input = Inputs.documents(spark, inputDir, rows, Some(a.seed))
-    attempted += input.rows
-  }
+  def afterSetup(spark: SparkSession): Unit =
+    input = Inputs.documents(spark, inputDir, source, rows, Some(a.seed))
 
   /** The previous pass's cached tables are dropped here, untimed, rather
     * than when it ends, so the live heap read after each pass includes

@@ -1,8 +1,10 @@
 package perfbench
 
+import com.sun.management.GarbageCollectionNotificationInfo
 import java.lang.management.ManagementFactory
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler._
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** One timed interval. Spans of one pass share `pass`; `parent` is the id
@@ -32,17 +34,31 @@ final class Tracer {
   private def publish(): Unit = sc.foreach(_.setLocalProperty(Tracer.Prop,
     open.headOption.map { case (id, p) => s"$id:$p" }.orNull))
 
+  /** Driver-side busy intervals inside each pass's root span, by span id
+    * (see [[DriverSampler]]). */
+  val driverBusy =
+    new java.util.concurrent.ConcurrentHashMap[Long, Seq[(Double, Double)]]()
+
+  /** A pass's root span is sampled for driver-side work (`driverBusy`). */
   def span[T](pass: Int, name: String)(f: => T): T = {
     val id = nextId()
     val parent = open.headOption.map(_._1).getOrElse(0L)
+    val sampler =
+      if (open.isEmpty) Some(new DriverSampler(Thread.currentThread)) else None
     val t0 = nowMs
     open = (id, pass) :: open
     publish()
     try f
     finally {
+      val t1 = nowMs
       open = open.tail
       publish()
-      spans.add(Span(id, pass, name, parent, t0, nowMs))
+      val attrs = sampler.fold(Map.empty[String, Double]) { s =>
+        val iv = s.finish()
+        driverBusy.put(id, iv)
+        Map("driver_busy_s" -> iv.map(x => x._2 - x._1).sum / 1000.0)
+      }
+      spans.add(Span(id, pass, name, parent, t0, t1, attrs))
     }
   }
 
@@ -139,6 +155,8 @@ object Jvm {
     .filter(_.isCompilationTimeMonitoringSupported)
     .map(_.getTotalCompilationTime).getOrElse(0L)
 
+  def uptimeMs: Long = ManagementFactory.getRuntimeMXBean.getUptime
+
   /** Heap occupancy after a forced full collection, from the heap pools'
     * collection usage. It is read twice with a pause between: the first
     * collection lets Spark's ContextCleaner see unreachable broadcasts,
@@ -149,6 +167,93 @@ object Jvm {
     Thread.sleep(200)
     System.gc()
     heapPools.flatMap(p => Option(p.getCollectionUsage)).map(_.getUsed).sum / 1048576.0
+  }
+
+  /** Heap occupancy after every collection, as the heap pools' collection
+    * usage reads right after it: each pool holds its usage after the last
+    * collection that covered it (a young collection updates eden and the
+    * survivor spaces, a full one the old generation too). Readings are
+    * taken from the collectors' notifications, with the collection's end
+    * in JVM uptime ms, so a pass can pick the collections that ended
+    * inside it. */
+  object AfterGc {
+    private val gcPools: Map[String, Set[String]] =
+      gcs.map(g => g.getName -> g.getMemoryPoolNames.toSet).toMap
+    private val last = scala.collection.mutable.Map.empty[String, Long]
+    heapPools.foreach(p => Option(p.getCollectionUsage).foreach(u =>
+      last(p.getName) = u.getUsed))
+    private val readings = ArrayBuffer.empty[(Long, Double)]
+
+    private val listener = new javax.management.NotificationListener {
+      def handleNotification(n: javax.management.Notification, hb: AnyRef): Unit =
+        if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+          val info = GarbageCollectionNotificationInfo.from(
+            n.getUserData.asInstanceOf[javax.management.openmbean.CompositeData])
+          val covered = gcPools.getOrElse(info.getGcName, Set.empty[String])
+          val gc = info.getGcInfo
+          AfterGc.synchronized {
+            gc.getMemoryUsageAfterGc.asScala.foreach { case (pool, u) =>
+              if (last.contains(pool) && covered(pool)) last(pool) = u.getUsed
+            }
+            readings += gc.getEndTime -> last.values.sum / 1048576.0
+          }
+        }
+    }
+    gcs.foreach(_.asInstanceOf[javax.management.NotificationEmitter]
+      .addNotificationListener(listener, null, null))
+
+    /** Registers the listener (on first use of this object). */
+    def start(): Unit = ()
+
+    /** Readings of the collections that ended in [fromMs, toMs] uptime. */
+    def between(fromMs: Long, toMs: Long): Seq[Double] = synchronized {
+      readings.collect { case (t, mb) if t >= fromMs && t <= toMs => mb }.toSeq
+    }
+  }
+}
+
+/** Samples, every millisecond while it runs, whether the driver side is
+  * working: the calling thread, or one of the threads Spark runs driver
+  * work on (scheduler events, broadcast and exchange materialisation,
+  * subqueries), is RUNNABLE. A thread that waits for a job is not. The
+  * busy time comes back as epoch-ms intervals, a measurement taken apart
+  * from the listener's job and stage times. */
+final class DriverSampler(main: Thread) {
+  @volatile private var stop = false
+  private val busy = ArrayBuffer.empty[(Double, Double)]
+  private val thread = new Thread(() => {
+    var helpers = Seq.empty[Thread]
+    var tick = 0
+    var open = -1.0
+    while (!stop) {
+      if (tick % 50 == 0) helpers = DriverSampler.helpers()
+      tick += 1
+      java.util.concurrent.locks.LockSupport.parkNanos(1000000L)
+      val now = System.currentTimeMillis().toDouble
+      val on = main.getState == Thread.State.RUNNABLE ||
+        helpers.exists(_.getState == Thread.State.RUNNABLE)
+      if (on && open < 0) open = now
+      else if (!on && open >= 0) { busy += open -> now; open = -1.0 }
+    }
+    if (open >= 0) busy += open -> System.currentTimeMillis().toDouble
+  }, "perfbench-driver-sampler")
+  thread.setDaemon(true)
+  thread.start()
+
+  /** Stops sampling and returns the busy intervals. */
+  def finish(): Seq[(Double, Double)] = { stop = true; thread.join(); busy.toSeq }
+}
+
+object DriverSampler {
+  private val prefixes = Seq("dag-scheduler-event-loop", "broadcast-exchange",
+    "shuffle-exchange", "ResultQueryStageExecution", "subquery")
+
+  def helpers(): Seq[Thread] = {
+    var g = Thread.currentThread.getThreadGroup
+    while (g.getParent != null) g = g.getParent
+    val all = new Array[Thread](g.activeCount() * 2 + 16)
+    all.take(g.enumerate(all, true)).filter(t =>
+      prefixes.exists(t.getName.startsWith)).toSeq
   }
 }
 
