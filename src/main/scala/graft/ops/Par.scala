@@ -40,9 +40,11 @@ private[graft] object Par {
 
   def spread(df: DataFrame, idCol: String): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    val bytesPerTask = df.sparkSession.conf
-      .getOption("spark.graft.spread.bytesPerTask").map(_.toLong)
-      .getOrElse(64L * 1024)
+    val key = "spark.graft.spread.bytesPerTask"
+    val bytesPerTask = df.sparkSession.conf.getOption(key)
+      .fold(64L * 1024)(v => v.toLongOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"$key must be a positive long, got '$v'")))
     // size from the LEAF relations (actual file bytes for a parquet
     // scan), not the projected plan: intermediate Project/Filter stats
     // re-estimate strings at a 20-byte default, 15× under this corpus's

@@ -9,17 +9,17 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Spark lifecycle of the extraction pipeline (SURVEY.md §3.1 "Spark shape
-  * of the same lifecycle"): read → triage/validate → url-hash repartition (unique key, no salt needed) →
-  * one fused mapPartitions kernel stage → ordered deterministic output →
-  * metrics + idempotent commit.
+  * of the same lifecycle"): read → triage/validate → one fused
+  * mapPartitions kernel stage → url-hash exchange routed by output bucket
+  * (`bucketCol`) → ordered deterministic output → metrics + idempotent
+  * commit.
   *
   * Design notes for 100 TB scale:
   *  - The kernel is a NARROW map: no shuffle is required for extraction
   *    itself. The single repartition exists to (a) decouple task count
   *    from input file layout and (b) break up skewed hosts (70% of rows
-  *    can share one host in CC crawls); its key is the URL hash — urls
-  *    are unique, so the key is uniform by construction and host skew
-  *    never enters it (no salting step is needed or present).
+  *    can share one host in CC crawls); its key is the url's output
+  *    bucket (`bucketCol`), so host skew never enters it.
   *  - All per-row stages are fused in ONE mapPartitions (reference analog:
   *    src/ocrmypdf/_pipelines/_common.py:446-476 runs preview→rasterize→
   *    preprocess→ocr back-to-back per page inside one task). Never one
@@ -62,14 +62,25 @@ object Jobs {
 
   /** The url-hash bucket/partition key — THE single definition: metrics,
     * the bucketed writer, and the table layout must agree on bucket
-    * membership, so they all call this. */
+    * membership, so they all call this.
+    *
+    * It is also the exchange routing: `repartitionById(n, bucketCol(n))`
+    * sends bucket K to shuffle partition K as-is (no second hash), so
+    * when the exchange width equals the writer's bucket count each write
+    * task holds exactly one bucket and a pass writes one part file per
+    * bucket, not one per (task, bucket). Urls are unique, so xxhash64
+    * spreads them uniformly and host skew never enters the key. A plain
+    * `repartition(n, bucketCol(n))` would re-murmur the n coarse values
+    * into n partitions (balls-in-bins: ~1/e of tasks empty). The routing
+    * is a pass-through partitioning: it does not satisfy a clustering on
+    * `url`, so a downstream groupBy/join on `url` plans its own
+    * exchange. */
   def bucketCol(buckets: Int) =
     pmod(xxhash64(col("url")), lit(buckets)).cast("int")
 
   /** The extraction pipeline: narrow fused kernel first, THEN the
-    * url-hash repartition on the *output* (the key is the unique url —
-    * uniform under murmur3, so no salting step exists or is needed;
-    * see the comment in `extract`).
+    * url-hash exchange on the *output*, routed by output bucket (see
+    * `bucketCol`).
     *
     * Ordering rationale (100 TB): the kernel is a narrow map — input
     * splits already balance it, so shuffling raw `html` bytes before
@@ -82,13 +93,8 @@ object Jobs {
     * first via `rebalanceInput`. */
   def extract(pages: Dataset[PageRow], partitions: Int,
       cfg: ExtractConfig = ExtractConfig()): Dataset[ExtractResult] = {
-    // repartition directly on the unique url: HashPartitioning murmurs
-    // the expression value, so pre-bucketing with pmod(xxhash64, n)
-    // would be DOUBLE hashing — n coarse key classes rehashed into n
-    // partitions leaves ~1/e of tasks empty and piles 2-3 classes on
-    // others (balls-in-bins), the opposite of the uniform layout this
-    // shuffle exists for. Unique urls → murmur3 spread is uniform.
-    extractNarrow(pages, cfg).repartition(partitions, col("url"))
+    extractNarrow(pages, cfg)
+      .repartitionById(partitions, bucketCol(partitions))
   }
 
   /** Pre-kernel rebalance for skewed input layouts: shuffles the raw rows

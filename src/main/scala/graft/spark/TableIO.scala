@@ -51,38 +51,11 @@ final class ParquetTableIO(root: String) extends TableIO {
       .mode("overwrite")
       .parquet(path(table))
 
-  private def bucketed(df: DataFrame, buckets: Int): DataFrame = {
-    // One write task per bucket WITHOUT RangePartitioning: a range
-    // repartition first runs a bounds-SAMPLING job that re-executes the
-    // whole upstream plan (the uncached extraction kernel — at the
-    // 100 TB shape the write would pay the kernel twice). Bucket values
-    // are known to be exactly 0..B-1, so no sampling is needed; and a
-    // plain repartition(col("bucket")) would re-MURMUR the B coarse
-    // values into B partitions (balls-in-bins: ~1/e of write tasks
-    // empty, others carrying 2-3 whole buckets — the double-hash skew
-    // Jobs.extract's comment documents). Instead: precompute, per
-    // bucket, a SALT whose murmur3 hash routes to a distinct shuffle
-    // partition (coupon-collector over ints, deterministic, driver-side
-    // and O(B log B) cheap), and hash-repartition on the salt — one
-    // shuffle pass, exactly one task per bucket.
-    import org.apache.spark.sql.catalyst.expressions.{Literal => CatLit, Murmur3Hash}
-    val salts = new Array[Int](buckets)
-    val seen = new Array[Boolean](buckets)
-    var k = 0
-    var found = 0
-    while (found < buckets) {
-      // the same hash HashPartitioning applies: murmur3(seed 42), pmod N
-      val h = Murmur3Hash(Seq(CatLit(k)), 42).eval(null).asInstanceOf[Int]
-      val p = ((h % buckets) + buckets) % buckets
-      if (!seen(p)) { seen(p) = true; salts(p) = k; found += 1 }
-      k += 1
-    }
-    df.withColumn("bucket",
-        pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
-      .withColumn("__route", element_at(typedLit(salts.toSeq), col("bucket") + 1))
-      .repartition(buckets, col("__route"))
-      .drop("__route")
-  }
+  /** One write task per bucket: the exchange is routed by output bucket
+    * (see `Jobs.bucketCol`). */
+  private def bucketed(df: DataFrame, buckets: Int): DataFrame =
+    df.withColumn("bucket", Jobs.bucketCol(buckets))
+      .repartitionById(buckets, col("bucket"))
 
   def writeMetrics(df: DataFrame, table: String): Unit =
     df.write.option("compression", "zstd").mode("append").parquet(path(table))

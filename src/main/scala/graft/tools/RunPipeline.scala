@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** The full production lifecycle as ONE spark-submit-able job — the shape
   * a cluster run uses (SURVEY.md §3.1 "Spark shape of the same
-  * lifecycle"): source → fused narrow extract kernel → salted url-hash
-  * repartition → idempotent bucket-committed write (+ per-bucket lineage
+  * lifecycle"): source → fused narrow extract kernel → url-hash exchange
+  * routed by output bucket (`Jobs.bucketCol`) → idempotent
+  * bucket-committed write (+ per-bucket lineage
   * metrics) → read-back verification (the reference's report_output_pdf /
   * check_pdf discipline: re-open what you just wrote and validate).
   *

@@ -145,6 +145,23 @@ class OpsSpec extends AnyFunSuite {
     assert(out.toSeq == Seq((2L, 1L), (1L, 3L)))
   }
 
+  test("spread: bytesPerTask conf accepts only a positive long") {
+    import spark.implicits._
+    val key = "spark.graft.spread.bytesPerTask"
+    val df = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
+    try {
+      Seq("64k", "0", "-1").foreach { v =>
+        spark.conf.set(key, v)
+        val e = intercept[IllegalArgumentException](
+          graft.ops.Par.spread(df, "doc_id"))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$v'"),
+          e.getMessage)
+      }
+      spark.conf.set(key, "1")
+      assert(graft.ops.Par.spread(df, "doc_id").count() == 2)
+    } finally spark.conf.unset(key)
+  }
+
   test("dedup minhash: near-identical docs pair with high est_jaccard") {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog again and again " * 4

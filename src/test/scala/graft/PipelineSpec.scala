@@ -303,16 +303,37 @@ class PipelineSpec extends AnyFunSuite {
         .filter(_.endsWith(".parquet")))
     assert(parts.nonEmpty && parts.forall(_.endsWith(".zstd.parquet")),
       s"non-ZSTD part files: ${parts.filterNot(_.endsWith(".zstd.parquet")).toSeq}")
-    // one write task per bucket (the salted exact routing): a bucket dir
-    // with 2+ part files means buckets collided in one shuffle partition
-    // (balls-in-bins regression), 0 files means an empty task wrote nothing
-    bucketDirs.foreach { d =>
-      val n = new java.io.File(root, d).listFiles()
-        .count(_.getName.endsWith(".parquet"))
-      assert(n == 1, s"$d has $n part files — bucket routing drifted")
-    }
+    // one write task per bucket (the exchange routed by output bucket): a
+    // bucket dir with 2+ part files means buckets collided in one shuffle
+    // partition or one bucket spread over several tasks; 0 files means an
+    // empty task wrote nothing
+    def onePartPerBucket(table: java.io.File): Unit =
+      table.listFiles().filter(_.isDirectory).foreach { d =>
+        val n = d.listFiles().count(_.getName.endsWith(".zstd.parquet"))
+        assert(n == 1, s"${d.getName} has $n part files — bucket routing drifted")
+      }
+    onePartPerBucket(root)
     // read-back round-trips every row
     assert(spark.read.parquet(s"$out/extracted").count() == 60)
+
+    // the production lifecycle: Jobs.extract's exchange must already
+    // route each bucket to one task, so the checkpointed write emits B
+    // part files per pass, not B² — and the read-back is still the
+    // scalar kernel's output per url
+    val codec = "spark.sql.parquet.compression.codec"
+    val prevCodec = spark.conf.getOption(codec)
+    spark.conf.set(codec, Jobs.scaleConfs(codec))
+    try CheckpointedWriter.run(
+      Jobs.extract(Jobs.syntheticPages(spark, 60), 4), s"$out/ckpt", 4)
+    finally prevCodec.fold(spark.conf.unset(codec))(spark.conf.set(codec, _))
+    val dataRoot = new java.io.File(CheckpointedWriter.dataDir(s"$out/ckpt"))
+    assert(dataRoot.listFiles().count(_.isDirectory) == 4)
+    onePartPerBucket(dataRoot)
+    val back = CheckpointedWriter.readBack(spark, s"$out/ckpt")
+      .select("url", "text", "outcome").collect()
+      .map(r => r.getString(0) -> ((r.getString(1), r.getString(2)))).toMap
+    val scalar = (0L until 60L).map(i => Extractor.extract(SyntheticCorpus.row(i)))
+    assert(back == scalar.map(e => e.url -> ((e.text, e.outcome))).toMap)
   }
 
   test("compact: bin-packs small part files, never regresses, recovers") {
@@ -621,16 +642,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(open.contains(299L) && !open.contains(150L))
   }
 
-  test("skew: salted key spreads the hot host across partitions") {
+  test("skew: the url-hash exchange spreads the hot host across partitions") {
     import spark.implicits._
-    val pages = Jobs.syntheticPages(spark, 400)
-    // ~70% of rows share one host; with the salted url-hash key the max
-    // partition holds far less than the hot-host share
-    val parts = pages.toDF()
-      .repartition(8, pmod(xxhash64(col("url")), lit(8)))
+    // ~70% of rows share one host; Jobs.extract's exchange keys on the
+    // url's bucket, so the max partition holds far less than the hot-host
+    // share and no partition is left empty
+    val parts = Jobs.extract(Jobs.syntheticPages(spark, 400), 8)
       .mapPartitions(it => Iterator(it.size)).collect()
-    assert(parts.sum == 400)
-    assert(parts.max < 400 * 7 / 10, s"skewed partition sizes: ${parts.toSeq}")
+    assert(parts.length == 8 && parts.sum == 400)
+    assert(parts.max < 400 * 7 / 10 && parts.min > 0,
+      s"skewed partition sizes: ${parts.toSeq}")
   }
 
   test("observe: in-flight metrics reconcile with the output") {
